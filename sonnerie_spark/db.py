@@ -705,6 +705,15 @@ class Database:
         df.createOrReplaceTempView(name)
         return df
 
+    def _points(self):
+        """The lazily built PointReader behind get/get_many/get_prefix;
+        it keeps the footer and decoded-block caches for this handle."""
+        if self._point_reader is None:
+            from sonnerie_spark.pointread import PointReader
+
+            self._point_reader = PointReader(self)
+        return self._point_reader
+
     def get(
         self,
         key: str,
@@ -715,16 +724,13 @@ class Database:
         """Exact-key lookup via the driver-side pyarrow fast path (O2).
 
         Same result as ``read(key=...).collect()`` but without a Spark
-        job — footer-stat row-group pruning makes this a ~10 ms read,
-        matching the reference's mmap binary search
+        job — footer-stat row-group pruning plus the reader's cache of
+        decoded row groups make this a few-ms read, like the reference's
+        mmap binary search
         (segment_reader.rs:173-234, ~15 ms random lookup). Wildcards and
         scans still use the Spark plan.
         """
-        if self._point_reader is None:
-            from sonnerie_spark.pointread import PointReader
-
-            self._point_reader = PointReader(self)
-        return self._point_reader.get(key, after_ns=after_ns, before_ns=before_ns)
+        return self._points().get(key, after_ns=after_ns, before_ns=before_ns)
 
     def agg_series(
         self,
@@ -791,11 +797,7 @@ class Database:
         """Batch :meth:`get`: {key: rows} in ONE driver-side merge pass
         (run listing, footers, and delete markers amortized across the
         batch — the point-read analogue of ``read(keys=[...])``)."""
-        if self._point_reader is None:
-            from sonnerie_spark.pointread import PointReader
-
-            self._point_reader = PointReader(self)
-        return self._point_reader.get_many(
+        return self._points().get_many(
             keys, after_ns=after_ns, before_ns=before_ns
         )
 
@@ -803,7 +805,10 @@ class Database:
         """Operational database report from parquet footers alone — no
         Spark job, O(runs) metadata reads (the cost of one directory
         listing plus cached footers). Keys: per-run name/files/rows/
-        bytes, totals, delete-marker count, bucket count.
+        bytes, totals, delete-marker count, bucket count, and — once a
+        point read has run on this handle — ``block_cache``: the point
+        reader's hits/misses/evictions/resident bytes (counters it
+        already keeps; nothing is read for them).
 
         An extension (the reference has no introspection command); the
         numbers mirror what its users reconstruct with `ls` + dump."""
@@ -830,7 +835,7 @@ class Database:
             )
             total_rows += rows
             total_bytes += nbytes
-        return {
+        out = {
             "runs": runs,
             "n_runs": len(runs),
             "total_rows": total_rows,
@@ -838,6 +843,9 @@ class Database:
             "delete_markers": n_markers,
             "buckets": self.buckets,
         }
+        if self._point_reader is not None:
+            out["block_cache"] = self._point_reader.cache_stats()
+        return out
 
     def get_prefix(
         self,
@@ -851,11 +859,7 @@ class Database:
         pyarrow like :meth:`get`, bounded by row-group count — returns
         ``None`` when the match is too large, signalling the caller to
         use the distributed :meth:`read` plan instead."""
-        if self._point_reader is None:
-            from sonnerie_spark.pointread import PointReader
-
-            self._point_reader = PointReader(self)
-        return self._point_reader.get_range(
+        return self._points().get_range(
             prefix,
             prefix_upper_bound(prefix),
             after_ns=after_ns,

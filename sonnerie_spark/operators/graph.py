@@ -60,70 +60,92 @@ def connected_components(
     """
     from pyspark.sql import Observation
 
-    # decimal(38,0) BEFORE the sum: V node ids of up to 2^63 would
-    # overflow a long accumulator far below the claimed corpus scale
-    _label_sum = F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+    # the row count rides the same Observation (no extra job); it tells
+    # an empty label table from an overflowed sum (_observed_sum)
+    _n = F.count(F.lit(1)).alias("n")
     e = pairs.select(
         F.col(src).cast("long").alias("s"), F.col(dst).cast("long").alias("d")
     )
     sym = e.union(e.select(F.col("d").alias("s"), F.col("s").alias("d"))).distinct()
     sym = sym.persist()
-    obs0 = Observation()
-    labels = (
-        sym.select(F.col("s").alias("id"))
-        .distinct()
-        .withColumn("comp", F.col("id"))
-        .observe(obs0, _label_sum)
-    )
-    labels = labels.localCheckpoint(eager=True)
-    prev_sum = obs0.get["s"] or 0
-    for it in range(max_iter):
-        # 1. propagate: min over own label and all neighbour labels
-        msgs = sym.join(labels.withColumnRenamed("id", "s"), "s").select(
-            F.col("d").alias("id"), "comp"
+    try:
+        obs0 = Observation()
+        labels = (
+            sym.select(F.col("s").alias("id"))
+            .distinct()
+            .withColumn("comp", F.col("id"))
+            .observe(obs0, _label_sum(), _n)
         )
-        nxt = (
-            labels.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("comp").alias("comp"))
-        )
-        # 2. pointer jump through the PREVIOUS round's label table:
-        # comp <- labels(comp). Every comp value is a node id of the
-        # same component and labels() is monotone non-increasing, so the
-        # jump stays correct while still halving chain length per round
-        # (two-phase variant). Jumping through `labels` — an already-
-        # checkpointed leaf — instead of `nxt` itself keeps the join's
-        # sides independent (Catalyst's attribute dedup rejects the
-        # aggregate self-join) and saves a mid-round materialization.
-        ptr = labels.withColumnRenamed("comp", "comp2").withColumnRenamed(
-            "id", "comp"
-        )
-        obs = Observation()
-        nxt = (
-            nxt.join(ptr, "comp")
-            .select("id", F.col("comp2").alias("comp"))
-            .observe(obs, _label_sum)
-        )
-        # 3. converged iff no label changed, i.e. the monotone label
-        # sum held steady this round (exact integer arithmetic).
-        nxt = nxt.localCheckpoint(eager=True)
-        labels = nxt
-        cur_sum = obs.get["s"] or 0
-        if cur_sum == prev_sum:
-            break
-        prev_sum = cur_sum
-    else:
-        # An unconverged label table is silently WRONG for the documented
-        # "comp = min id of the component" contract — fail loudly. With
-        # pointer jumping, max_iter rounds cover diameters up to ~2^max_iter,
-        # so hitting this means an extreme graph, not a tuning issue.
+        labels = labels.localCheckpoint(eager=True)
+        prev_sum = _observed_sum(obs0)
+        for it in range(max_iter):
+            # 1. propagate: min over own label and all neighbour labels
+            msgs = sym.join(labels.withColumnRenamed("id", "s"), "s").select(
+                F.col("d").alias("id"), "comp"
+            )
+            nxt = (
+                labels.unionByName(msgs)
+                .groupBy("id")
+                .agg(F.min("comp").alias("comp"))
+            )
+            # 2. pointer jump through the PREVIOUS round's label table:
+            # comp <- labels(comp). Every comp value is a node id of the
+            # same component and labels() is monotone non-increasing, so the
+            # jump stays correct while still halving chain length per round
+            # (two-phase variant). Jumping through `labels` — an already-
+            # checkpointed leaf — instead of `nxt` itself keeps the join's
+            # sides independent (Catalyst's attribute dedup rejects the
+            # aggregate self-join) and saves a mid-round materialization.
+            ptr = labels.withColumnRenamed("comp", "comp2").withColumnRenamed(
+                "id", "comp"
+            )
+            obs = Observation()
+            nxt = (
+                nxt.join(ptr, "comp")
+                .select("id", F.col("comp2").alias("comp"))
+                .observe(obs, _label_sum(), _n)
+            )
+            # 3. converged iff no label changed, i.e. the monotone label
+            # sum held steady this round (exact integer arithmetic).
+            nxt = nxt.localCheckpoint(eager=True)
+            labels = nxt
+            cur_sum = _observed_sum(obs)
+            if cur_sum == prev_sum:
+                break
+            prev_sum = cur_sum
+        else:
+            # An unconverged label table is silently WRONG for the documented
+            # "comp = min id of the component" contract — fail loudly. With
+            # pointer jumping, max_iter rounds cover diameters up to ~2^max_iter,
+            # so hitting this means an extreme graph, not a tuning issue.
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds; "
+                f"raise max_iter"
+            )
+    finally:
         sym.unpersist()
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds; "
-            f"raise max_iter"
-        )
-    sym.unpersist()
     return labels
+
+
+def _label_sum():
+    """The convergence probe: the sum of all labels. decimal(38,0)
+    BEFORE the sum: V node ids of up to 2^63 would overflow a long
+    accumulator far below the claimed corpus scale."""
+    return F.sum(F.col("comp").cast("decimal(38,0)")).alias("s")
+
+
+def _observed_sum(obs) -> int:
+    """A round's label sum. Non-ANSI decimal overflow yields NULL; read
+    as 0, two overflowed rounds would compare equal and report a false
+    convergence, so a NULL sum over a non-empty table raises. An empty
+    graph sums to NULL over zero rows: 0."""
+    got = obs.get
+    if got["s"] is None and got["n"] > 0:
+        raise ArithmeticError(
+            f"connected_components: label sum over {got['n']} nodes is NULL "
+            f"(decimal overflow); convergence cannot be decided"
+        )
+    return got["s"] or 0
 
 
 def cc_oracle_sql(pairs_sql: str) -> str:

@@ -6,7 +6,7 @@ for scans, hopeless against the reference's ~15 ms random key lookup
 read touches a handful of row groups at most: the run manifest plus
 Parquet footer statistics identify them without any cluster work, so we
 read them directly with pyarrow on the driver and apply the (tiny)
-LWW-dedup + delete-marker semantics in Python.
+LWW-dedup + delete-marker semantics with Arrow/numpy kernels.
 
 This is the same division of labor the reference uses — its point
 lookup is a binary search over mmap'ed segment headers
@@ -14,23 +14,40 @@ lookup is a binary search over mmap'ed segment headers
 analytics keep the Spark plan; only `key == constant` (optionally with a
 time range) takes this path.
 
-Scale note: the fast path reads only footers (cached) plus the pruned
-row groups, so its cost is O(runs) metadata + O(selectivity) data — on
-a compacted DB that is one footer and usually one row group. It runs on
-whatever process calls it (driver or serve worker); it never loads a
-run's full data.
+Runs are immutable, so a decoded row group never changes: each reader
+keeps the blocks it decodes (one row group of one run file, as an Arrow
+table plus each key's row range) in one byte-bounded LRU, and each
+delete run's markers beside its cached footers — Shark's (SIGMOD 2013)
+cure for the deserialization cost of repeated reads.
+
+Scale note: on a cache hit a read costs O(runs) footer bisections and
+block-index lookups plus zero-copy slices; a miss adds one row-group
+decode per block; the merge is one Arrow sort of the slices. It runs on
+whatever process calls it (driver or serve worker), never loads a run's
+full data, and holds at most ``BLOCK_CACHE_BYTES`` of decoded blocks.
 """
 
 from __future__ import annotations
 
+import bisect
 import os
+import threading
+from collections import OrderedDict
 from typing import Any
 
+import numpy as np
+import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
 
 from sonnerie_spark.bucketing import bucket_of, parse_bucket_id, read_run_buckets
 from sonnerie_spark.plans.keyfilter import wildcard_regex
+
+# Decoded-block budget of one PointReader. A 150k-record, 33-run
+# database decodes to ~8 MB of Arrow (3 MB of parquet), so this keeps a
+# working set many times that size resident; past it the least recently
+# used blocks are dropped and decoded again on their next use.
+BLOCK_CACHE_BYTES = 128 * 1024 * 1024
 
 
 class _FileMeta:
@@ -83,6 +100,10 @@ class _FileMeta:
                 else:
                     ts_mins.append(tst.min)
                     ts_maxs.append(tst.max)
+        if any(maxs[g] > mins[g + 1] for g in range(len(mins) - 1)):
+            # groups not key-ordered (a file this engine did not write
+            # sorted): a bisect would miss groups, so read them all
+            mins = maxs = None  # type: ignore[assignment]
         self.mins = mins
         self.maxs = maxs
         self.ts_mins = ts_mins
@@ -103,29 +124,6 @@ class _FileMeta:
             return False
         return True
 
-    def groups_for(
-        self,
-        key: str,
-        after_ns: int | None = None,
-        before_ns: int | None = None,
-    ) -> list[int]:
-        if self.mins is None:
-            return list(range(self.pf.metadata.num_row_groups))
-        import bisect
-
-        # candidate groups: those with min <= key <= max; since groups
-        # are key-sorted, they form a contiguous range around the
-        # insertion point of `key` in `mins`.
-        hi = bisect.bisect_right(self.mins, key)
-        out = []
-        for g in range(hi - 1, -1, -1):
-            if self.maxs[g] < key:
-                break
-            if self._ts_ok(g, after_ns, before_ns):
-                out.append(g)
-        out.reverse()
-        return out
-
     def groups_for_range(
         self,
         lo: str,
@@ -136,8 +134,6 @@ class _FileMeta:
         """Row groups possibly containing keys in ``[lo, hi)``."""
         if self.mins is None:
             return list(range(self.pf.metadata.num_row_groups))
-        import bisect
-
         # groups sorted by key: start at the first whose max >= lo, stop
         # before the first whose min >= hi.
         start = bisect.bisect_left(self.maxs, lo)
@@ -149,38 +145,78 @@ class _FileMeta:
         ]
 
 
+class _Block:
+    """One decoded row group, rows ordered by key, with each distinct
+    key's contiguous row range: ``keys[i]`` owns rows
+    ``starts[i]:starts[i + 1]``."""
+
+    __slots__ = ("table", "keys", "starts", "nbytes")
+
+    def __init__(self, tbl):
+        n = tbl.num_rows
+        k = tbl.column("key")
+        if n > 1 and pc.any(pc.less(k.slice(1), k.slice(0, n - 1))).as_py():
+            # a group not written (key, ts)-sorted: sort it once, here
+            tbl = tbl.sort_by([("key", "ascending"), ("ts", "ascending")])
+            k = tbl.column("key")
+        firsts = np.flatnonzero(
+            pc.not_equal(k.slice(1), k.slice(0, max(n - 1, 0))).to_numpy()
+        ) + 1
+        firsts = np.concatenate(([0], firsts)) if n else firsts
+        self.table = tbl
+        self.keys = k.take(firsts).to_pylist()
+        self.starts = firsts.tolist() + [n]
+        # Arrow buffers plus the index's Python objects (~100 B a key)
+        self.nbytes = tbl.nbytes + 100 * len(self.keys)
+
+    def rows(self, lo: str, hi: str | None):
+        """Zero-copy slice of the rows with ``lo <= key < hi``."""
+        i = bisect.bisect_left(self.keys, lo)
+        j = len(self.keys) if hi is None else bisect.bisect_left(self.keys, hi, i)
+        return self.table.slice(self.starts[i], self.starts[j] - self.starts[i])
+
+
 class _RunFooters:
-    """Cached Parquet footers for one immutable run directory."""
+    """One cached immutable run directory: its files' footers, or the
+    markers of a delete run."""
 
-    __slots__ = ("mtime", "files")
+    __slots__ = ("mtime", "files", "markers")
 
-    def __init__(self, mtime: float, files: list[_FileMeta]):
+    def __init__(self, mtime: float, files: list[_FileMeta], markers: list[dict]):
         self.mtime = mtime
         self.files = files
+        self.markers = markers
 
 
 class PointReader:
     """Exact-key reads over a Database without Spark jobs.
 
-    Footers are cached per run directory (keyed by mtime); runs are
-    immutable once committed, so a cache entry stays valid until the run
-    is replaced by compaction (directory disappears or mtime changes).
+    Footers, delete markers and decoded blocks are cached per run
+    directory and keyed by its mtime; runs are immutable once
+    committed, so an entry stays valid until the run is replaced by
+    compaction (directory disappears or mtime changes) and is dropped
+    then. Serve handlers share one reader: the block LRU and its
+    counters sit behind one lock, and decodes run outside it.
     """
 
     def __init__(self, db):
         self.db = db
         self._footers: dict[str, _RunFooters] = {}
+        # (run path, run mtime, file path, row group) -> _Block, LRU first
+        self._blocks: OrderedDict[tuple, _Block] = OrderedDict()
+        self._lock = threading.Lock()
+        self.hits = self.misses = self.evictions = self.resident_bytes = 0
 
-    # -- footer cache ------------------------------------------------------
+    # -- footer and block caches ---------------------------------------------
 
     def _evict_stale_footers(self, all_runs) -> None:
-        """Evict footer-cache entries for runs no longer listed: each
+        """Evict cache entries for runs no longer listed: each footer
         entry pins OPEN fds (one pq.ParquetFile per part file), and a
         compacted-away run's path is never looked up again, so without
         this a long-lived reader (the serve process) leaks fds — and
         disk space, since deleted-but-open files survive — for every
         transaction ever replaced. Found by the serve soak
-        (tools/soak_serve.py).
+        (tools/soak_serve.py). The run's decoded blocks go with it.
 
         Thread-shape: serve handlers share one PointReader with no
         lock, so snapshot the key set in one C-level op (list(dict) —
@@ -188,8 +224,16 @@ class PointReader:
         another handler inserts, and pop() tolerates a concurrent
         eviction of the same key."""
         live = {r.path for r in all_runs}
-        for stale in [p for p in list(self._footers) if p not in live]:
-            self._footers.pop(stale, None)
+        stale = {p for p in list(self._footers) if p not in live}
+        for p in stale:
+            self._footers.pop(p, None)
+        if stale:
+            self._drop_blocks(stale)
+
+    def _drop_blocks(self, run_paths: set[str]) -> None:
+        with self._lock:
+            for k in [k for k in self._blocks if k[0] in run_paths]:
+                self.resident_bytes -= self._blocks.pop(k).nbytes
 
     def _run_footers(self, run) -> _RunFooters | None:
         # The whole stat/list/open sequence can race a compaction swap
@@ -200,19 +244,61 @@ class PointReader:
             cached = self._footers.get(run.path)
             if cached is not None and cached.mtime == mtime:
                 return cached
-            run_b = read_run_buckets(run.path)
-            files = []
-            for name in sorted(os.listdir(run.path)):
-                if not name.endswith(".parquet"):
-                    continue
-                p = os.path.join(run.path, name)
-                files.append(_FileMeta(p, pq.ParquetFile(p), run_b))
+            if run.is_delete:
+                entry = _RunFooters(mtime, [], self.db.delete_markers([run]))
+            else:
+                run_b = read_run_buckets(run.path)
+                files = []
+                for name in sorted(os.listdir(run.path)):
+                    if not name.endswith(".parquet"):
+                        continue
+                    p = os.path.join(run.path, name)
+                    files.append(_FileMeta(p, pq.ParquetFile(p), run_b))
+                entry = _RunFooters(mtime, files, [])
         except OSError:
             self._footers.pop(run.path, None)
+            self._drop_blocks({run.path})
             return None
-        entry = _RunFooters(mtime, files)
         self._footers[run.path] = entry
+        if cached is not None:
+            # replaced in place: a minor compaction publishes under the
+            # newest merged run's name
+            self._drop_blocks({run.path})
         return entry
+
+    def _block(self, bkey: tuple, fm: _FileMeta, g: int) -> _Block:
+        with self._lock:
+            blk = self._blocks.get(bkey)
+            if blk is not None:
+                self._blocks.move_to_end(bkey)
+                self.hits += 1
+                return blk
+            self.misses += 1
+        # a small group decodes faster on the calling thread than through
+        # Arrow's thread pool (0.49 vs 0.76 ms measured)
+        blk = _Block(fm.pf.read_row_group(g, use_threads=False))
+        with self._lock:
+            # a run leaves _footers before its blocks are dropped: a reader
+            # that lost a race with compaction parks no orphan block here
+            run = self._footers.get(bkey[0])
+            if run is not None and run.mtime == bkey[1] and bkey not in self._blocks:
+                self._blocks[bkey] = blk
+                self.resident_bytes += blk.nbytes
+                while self.resident_bytes > BLOCK_CACHE_BYTES:
+                    self.resident_bytes -= self._blocks.popitem(last=False)[1].nbytes
+                    self.evictions += 1
+        return blk
+
+    def cache_stats(self) -> dict:
+        """Block-cache counters; ``evictions`` counts LRU drops only,
+        not the blocks of replaced runs."""
+        with self._lock:
+            return {
+                "hits": self.hits,
+                "misses": self.misses,
+                "evictions": self.evictions,
+                "resident_bytes": self.resident_bytes,
+            }
 
     # -- point read --------------------------------------------------------
 
@@ -233,23 +319,8 @@ class PointReader:
         Pruning is computed against each run's RECORDED bucket count,
         never the handle's — correct mid-rebucket and from stale handles.
         """
-        want: dict[int, int] = {}  # run B -> bucket_of(key, B), memoized
-
-        def file_ok(fm):
-            if fm.bucket is None or fm.run_b is None:
-                return True
-            b = want.get(fm.run_b)
-            if b is None:
-                b = want[fm.run_b] = bucket_of(key, fm.run_b)
-            return fm.bucket == b
-
-        return self._merge(
-            lambda fm: fm.groups_for(key, after_ns, before_ns),
-            lambda tbl: tbl.filter(pc.equal(tbl.column("key"), key)),
-            after_ns=after_ns,
-            before_ns=before_ns,
-            file_ok=file_ok,
-        )
+        # key + "\0" is the smallest string above key
+        return self._merge([key], [(key, key + "\0")], after_ns, before_ns)
 
     def get_many(
         self,
@@ -259,39 +330,12 @@ class PointReader:
         before_ns: int | None = None,
     ) -> dict[str, list[dict]]:
         """Batch exact-key lookup: one merge pass over the UNION of the
-        keys' row groups, amortizing the run listing, footer reads, and
-        delete-marker load across the whole batch (a loop over ``get``
-        repeats all three per key). Returns {key: rows}, rows
-        ts-ascending; absent keys map to []."""
-        import pyarrow as pa
-
+        keys' row groups, amortizing the run listing, footer bisections
+        and the final sort across the whole batch. Returns {key: rows},
+        rows ts-ascending; absent keys map to []."""
         kset = sorted(set(keys))
-        arr = pa.array(kset)
-        buckets: dict[int, set[int]] = {}  # run B -> wanted bucket ids
-
-        def file_ok(fm):
-            if fm.bucket is None or fm.run_b is None:
-                return True
-            bs = buckets.get(fm.run_b)
-            if bs is None:
-                bs = buckets[fm.run_b] = {bucket_of(k, fm.run_b) for k in kset}
-            return fm.bucket in bs
-
-        def groups(fm):
-            gs: set[int] = set()
-            for k in kset:
-                gs.update(fm.groups_for(k, after_ns, before_ns))
-            return sorted(gs)
-
-        rows = self._merge(
-            groups,
-            lambda tbl: tbl.filter(pc.is_in(tbl.column("key"), value_set=arr)),
-            after_ns=after_ns,
-            before_ns=before_ns,
-            file_ok=file_ok,
-        )
         out: dict[str, list[dict]] = {k: [] for k in keys}
-        for r in rows:
+        for r in self._merge(kset, [(k, k + "\0") for k in kset], after_ns, before_ns):
             out[r["key"]].append(r)
         return out
 
@@ -314,9 +358,9 @@ class PointReader:
         point-read class regardless of the pattern a client sends.
         """
         total = 0
-        data_runs = self.db.data_runs()
-        self._evict_stale_footers(data_runs)
-        for run in data_runs:
+        all_runs = self.db.runs()
+        self._evict_stale_footers(all_runs)
+        for run in all_runs:
             footers = self._run_footers(run)
             if footers is None:
                 continue
@@ -324,96 +368,61 @@ class PointReader:
                 total += len(fm.groups_for_range(lo, hi, after_ns, before_ns))
                 if total > max_groups:
                     return None
+        return self._merge(None, [(lo, hi)], after_ns, before_ns)
 
-        def flt(tbl):
-            keep = pc.greater_equal(tbl.column("key"), lo)
-            if hi is not None:
-                keep = pc.and_(keep, pc.less(tbl.column("key"), hi))
-            return tbl.filter(keep)
-
-        return self._merge(
-            lambda fm: fm.groups_for_range(lo, hi, after_ns, before_ns),
-            flt,
-            after_ns=after_ns,
-            before_ns=before_ns,
-        )
-
-    def _merge(self, groups_fn, filter_fn, *, after_ns, before_ns, file_ok=None) -> list[dict]:
+    def _merge(self, keys, spans, after_ns, before_ns) -> list[dict]:
+        """Surviving rows in the key ``spans`` ((lo, hi) pairs; ``keys``:
+        the exact keys they stand for, or None), (key, ts)-sorted. LWW
+        is one sort by (key, ts, run ordinal): the last row of a
+        (key, ts) is the newest write. Same-run duplicates (legal in a
+        check_duplicates=False commit) resolve by payload rank first."""
         # A concurrent compaction swap can hide a run between the
         # directory listing and the footer read; proceeding would
         # silently drop that run's records, so restart the merge on a
         # fresh listing (bounded retries — each swap is a handful of
         # renames, so a second listing sees the merged replacement).
         for _attempt in range(5):
-            merged = self._merge_once(groups_fn, filter_fn, file_ok)
+            merged = self._merge_once(keys, spans, after_ns, before_ns)
             if merged is not None:
-                tables, markers = merged
+                parts, markers, names = merged
                 break
         else:
             raise RuntimeError("point read kept racing compaction swaps")
+        if not parts:
+            return []
+        tables = [p for _, p in parts]
+        try:
+            t = pa.concat_tables(tables)
+        except pa.ArrowInvalid:  # runs from different writers differ in nullability
+            t = pa.concat_tables(tables, promote_options="default")
+        run = np.repeat(
+            np.array([o for o, _ in parts], np.int32), [p.num_rows for _, p in parts]
+        )
+        # one chunk first: sorting hundreds of slices as chunks costs 2x
+        t = t.append_column("_run", pa.array(run)).combine_chunks().sort_by(
+            [("key", "ascending"), ("ts", "ascending"), ("_run", "ascending")]
+        )
+        same, dup = _adjacent(t)
+        if dup.any():
+            t = t.filter(_same_run_winners(t, dup))
+            same, _ = _adjacent(t)
+        keep = ~same  # the last row of each (key, ts) is the newest write
+        ts = t.column("ts").to_numpy()
+        if after_ns is not None:
+            keep &= ts >= after_ns
+        if before_ns is not None:
+            keep &= ts < before_ns
+        if markers:
+            keep &= ~_deleted(t, markers, names)
+        return _to_rows(t.filter(keep).drop_columns(["_run"]))
 
-        # Vectorized fast path for the compacted steady state: a single
-        # data run USUALLY holds no (key, ts) conflict (transactions
-        # written with the duplicate observation + disjoint bucket
-        # files), so with no delete markers the result is just filter +
-        # C-level sort — no per-row Python dict/tuple work. Cuts the
-        # 2000-record warm lookup ~2x. But check_duplicates=False
-        # commits (streaming ingest, rollup internals) can legally put
-        # duplicate (key, ts) rows in ONE run, so the path is guarded by
-        # a vectorized distinct-count probe; on conflict we fall through
-        # to the dict-based LWW resolve (later row in commit/file order
-        # wins — identical to the multi-run semantics).
-        run_names = {rn for rn, _ in tables}
-        if len(run_names) <= 1 and not markers:
-            if not tables:
-                return []
-            import pyarrow as pa
-
-            t = pa.concat_tables([tb for _, tb in tables])
-            if after_ns is not None:
-                t = t.filter(pc.greater_equal(t.column("ts"), after_ns))
-            if before_ns is not None:
-                t = t.filter(pc.less(t.column("ts"), before_ns))
-            distinct = t.select(["key", "ts"]).group_by(["key", "ts"]).aggregate([])
-            if distinct.num_rows == t.num_rows:
-                return t.sort_by(
-                    [("key", "ascending"), ("ts", "ascending")]
-                ).to_pylist()
-
-        from operator import itemgetter
-
-        by_kt: dict[tuple[str, int], tuple[str, dict]] = {}
-        for rn, tb in tables:  # commit order: later runs overwrite
-            for row in tb.to_pylist():
-                kt = (row["key"], row["ts"])
-                prev = by_kt.get(kt)
-                if (
-                    prev is not None
-                    and prev[0] == rn
-                    and _payload_rank(prev[1]) >= _payload_rank(row)
-                ):
-                    # Same-run duplicate (check_duplicates=False commit):
-                    # the Spark plan resolves it by max(struct(payload)),
-                    # so keep the payload-max row, not the later-read one.
-                    continue
-                by_kt[kt] = (rn, row)
-        out = []
-        for (key, ts), (txname, row) in by_kt.items():
-            if after_ns is not None and ts < after_ns:
-                continue
-            if before_ns is not None and ts >= before_ns:
-                continue
-            if any(_marker_hits(m, txname, key, ts) for m in markers):
-                continue
-            out.append(row)
-        out.sort(key=itemgetter("key", "ts"))
-        return out
-
-    def _merge_once(self, groups_fn, filter_fn, file_ok=None):
+    def _merge_once(self, keys, spans, after_ns, before_ns):
         """One merge attempt; None when the run set changed mid-read.
-        On success returns ``(tables, markers)`` — the per-run filtered
-        arrow tables (commit order) AND the delete markers read inside
-        the same race window; _merge resolves LWW/deletes on top.
+        On success returns ``(parts, markers, names)``: the matching
+        zero-copy block slices, each tagged with its data run's ordinal
+        (commit order); the delete markers read inside the same race
+        window; and the data runs' names. _merge resolves LWW/deletes
+        on top.
 
         Two race shapes with compaction's swap (db.py _compact_locked):
         a listed run vanishing mid-read (stat/open fails -> retry), and
@@ -434,36 +443,99 @@ class PointReader:
         fingerprint = self.db.run_names()
         all_runs = self.db.runs()
         self._evict_stale_footers(all_runs)
-        runs = [r for r in all_runs if not r.is_delete]
-        tables: list[tuple[str, object]] = []  # (run name, filtered table)
-        for run in runs:  # lexical order == commit order
+        by_bucket: dict[int, dict] = {}  # run B -> {bucket id: its keys' spans}
+        parts: list[tuple[int, Any]] = []
+        markers: list[dict] = []
+        names: list[str] = []
+        for run in all_runs:  # lexical order == commit order
             footers = self._run_footers(run)
             if footers is None:
                 return None  # run replaced under us: caller re-lists
+            if run.is_delete:
+                markers += footers.markers
+                continue
+            names.append(run.name)
             try:
                 for fm in footers.files:
-                    if file_ok is not None and not file_ok(fm):
-                        continue
-                    groups = groups_fn(fm)
-                    if not groups:
-                        continue
-                    tbl = filter_fn(fm.pf.read_row_groups(groups))
-                    if tbl.num_rows == 0:
-                        continue
-                    tables.append((run.name, tbl))
+                    sp = spans
+                    if keys is not None and fm.bucket is not None and fm.run_b is not None:
+                        bs = by_bucket.get(fm.run_b)
+                        if bs is None:
+                            bs = by_bucket[fm.run_b] = {}
+                            for k, s in zip(keys, spans):
+                                bs.setdefault(bucket_of(k, fm.run_b), []).append(s)
+                        sp = bs.get(fm.bucket, ())
+                    groups = {
+                        g for lo, hi in sp
+                        for g in fm.groups_for_range(lo, hi, after_ns, before_ns)
+                    }
+                    for g in groups:
+                        blk = self._block((run.path, footers.mtime, fm.path, g), fm, g)
+                        for lo, hi in sp:
+                            part = blk.rows(lo, hi)
+                            if part.num_rows:
+                                parts.append((len(names) - 1, part))
             except OSError:
                 self._footers.pop(run.path, None)
+                self._drop_blocks({run.path})
                 return None  # file deleted mid-read: retry fresh
-        try:
-            # Read markers from the attempt's own listing: one consistent
-            # snapshot per attempt, no second readdir, and an unrelated
-            # delete commit landing mid-attempt can't consume a retry.
-            markers = self.db.delete_markers(all_runs)
-        except OSError:
-            return None  # marker run purged mid-read: retry fresh
         if self.db.run_names() != fingerprint:
             return None  # listing raced a commit/compaction swap: retry
-        return tables, markers
+        return parts, markers, names
+
+
+def _to_rows(t) -> list[dict]:
+    """``t.to_pylist()`` at ~4x the speed: pyarrow converts list cells
+    one scalar at a time, so each list column converts as one flat value
+    list cut at its offsets, and null-free arrays go through numpy."""
+
+    def py(a):
+        return a.to_numpy(zero_copy_only=False).tolist() if a.null_count == 0 else a.to_pylist()
+
+    cols = []
+    for c in t.columns:
+        a = c.combine_chunks()
+        if pa.types.is_list(a.type):
+            flat, o = py(a.values), a.offsets.to_numpy().tolist()
+            cells = [flat[o[i]:o[i + 1]] for i in range(len(a))]
+            if a.null_count:
+                cells = [v if ok else None for v, ok in zip(cells, a.is_valid().to_pylist())]
+            cols.append(cells)
+        else:
+            cols.append(py(a))
+    names = t.column_names
+    return [dict(zip(names, row)) for row in zip(*cols)]
+
+
+def _adjacent(t):
+    """For a (key, ts, _run)-sorted table: ``same[i]`` — row i shares
+    (key, ts) with row i + 1, which supersedes it; ``dup[i]`` — and
+    both come from the same run."""
+    n = t.num_rows
+    same = np.zeros(n, bool)
+    dup = np.zeros(n, bool)
+    if n > 1:
+        k, ts, run = t.column("key"), t.column("ts").to_numpy(), t.column("_run").to_numpy()
+        same[:-1] = pc.equal(k.slice(1), k.slice(0, n - 1)).to_numpy() & (ts[1:] == ts[:-1])
+        dup[:-1] = same[:-1] & (run[1:] == run[:-1])
+    return same, dup
+
+
+def _same_run_winners(t, dup):
+    """Keep mask resolving duplicate (key, ts) rows WITHIN one run (a
+    check_duplicates=False commit) the way the Spark plan does
+    (``max(struct(payload))`` in _lww_dedup): each group's payload-max
+    row survives, the first of equal ones."""
+    keep = np.ones(t.num_rows, bool)
+    members = np.flatnonzero(dup | np.roll(dup, 1))
+    best: dict[tuple, tuple[int, dict]] = {}
+    for i, r in zip(members.tolist(), t.take(members).to_pylist()):
+        g = (r["key"], r["ts"], r["_run"])
+        if g not in best or _payload_rank(r) > _payload_rank(best[g][1]):
+            best[g] = (i, r)
+    keep[members] = False
+    keep[[i for i, _ in best.values()]] = True
+    return keep
 
 
 def _payload_rank(row: dict):
@@ -482,20 +554,36 @@ def _payload_rank(row: dict):
     return tuple(f(row[c]) for c in ("fmt", "v_long", "v_double", "v_str", "v_bin"))
 
 
-def _marker_hits(m: dict, txname: str, key: str, ts: int) -> bool:
-    """Python mirror of the delete predicate (database_reader.rs:481-492)."""
-    if not txname < m["_txname"]:
-        return False
-    if not (int(m["after_ns"]) <= ts < int(m["before_ns"])):
-        return False
+def _deleted(t, markers: list[dict], names: list[str]):
+    """Rows a delete marker suppresses (database_reader.rs:474-518): rows
+    of runs named before it (txid scoping) in its time window whose key
+    it matches — the key test runs once per distinct key."""
+    key = t.column("key")
+    ts = t.column("ts").to_numpy()
+    run = t.column("_run").to_numpy()
+    distinct = pc.unique(key).to_pylist()
+    dead = np.zeros(t.num_rows, bool)
+    for m in markers:
+        older = bisect.bisect_left(names, m["_txname"])  # runs named before it
+        hit = [k for k in distinct if _key_hits(m, k)]
+        if older and hit:
+            dead |= (
+                (run < older)
+                & (ts >= int(m["after_ns"]))
+                & (ts < int(m["before_ns"]))
+                & pc.is_in(key, value_set=pa.array(hit, pa.string())).to_numpy()
+            )
+    return dead
+
+
+def _key_hits(m: dict, key: str) -> bool:
+    """Does marker ``m`` cover ``key``? (database_reader.rs:481-492)"""
     if m["first_key"] and key < m["first_key"]:
         return False
     if m["last_key"] and key >= m["last_key"]:
         return False
     wc = m.get("wildcard") or "%"
-    if wc != "%" and not wildcard_regex(wc).match(key):
-        return False
-    return True
+    return wc == "%" or bool(wildcard_regex(wc).match(key))
 
 
 def arrow_agg_series(

@@ -12,10 +12,12 @@
 The reference keeps a 10-s-TTL cached ``DatabaseReader`` to amortize
 readdir+mmap (sonnerie-serve.rs:239-265). No analogous cache exists
 here ON PURPOSE: a GET's run listing happens inside ``Database.read``/
-``get`` (one readdir of immutable run dirs + cached parquet footers in
-``PointReader``), so a serve-layer listing cache would add a staleness
-window without removing any work — the reference's cache pays for mmap
-setup this engine does not do per request.
+``get`` (one readdir of immutable run dirs), so a serve-layer listing
+cache would add a staleness window without removing any work — the
+reference's cache pays for mmap setup this engine does not do per
+request. The listing stays uncached; what is cached is immutable:
+``PointReader`` keeps each run's parquet footers and delete markers and
+its decoded row groups, so a repeated exact-key GET decodes nothing.
 
 Threading: http.server's ThreadingHTTPServer drives Spark jobs from
 handler threads — Spark sessions are thread-safe for concurrent actions
@@ -71,6 +73,11 @@ def make_server(
         # never cut: every write unblocks as soon as the peer drains
         # some bytes.
         timeout = 120
+        # TCP_NODELAY on accepted sockets: a response goes out as
+        # several small writes (status + headers, then the body), and
+        # with Nagle on, the later write waits for the client's delayed
+        # ACK — up to ~40 ms added to every keep-alive GET and PUT.
+        disable_nagle_algorithm = True
 
         def log_message(self, *a):  # quiet
             pass

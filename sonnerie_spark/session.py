@@ -12,6 +12,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory``: ``SPARK_GRAFT_DRIVER_MEM`` when set, else
+    half the host's MemTotal, capped at 30g. 30g, NOT 32g: a >=32 GiB
+    heap silently disables JVM compressed oops (doubles object-pointer
+    width) — measured ~2x on the shuffle-heavy operators here. Where
+    the host size cannot be read, the cap."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open(meminfo) as f:
+            kib = next(int(ln.split()[1]) for ln in f if ln.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "30g"
+    return f"{min(kib // 2048, 30 * 1024)}m"
+
+
 def get_spark(app_name: str = "sonnerie_spark", shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults.
 
@@ -48,10 +65,7 @@ def get_spark(app_name: str = "sonnerie_spark", shuffle_partitions: int | None =
         # nanosecond longs (exactly the engine's ts model) instead of
         # failing — Spark TimestampType is only µs precision
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # 30g, NOT 32g: a >=32 GiB heap silently disables JVM compressed
-        # oops (doubles object-pointer width) — measured ~2x on the
-        # shuffle-heavy operators here.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "30g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

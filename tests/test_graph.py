@@ -129,6 +129,27 @@ def test_cc_nonconvergence_raises(spark):
         graph.connected_components(df, "id_a", "id_b", max_iter=2)
 
 
+def test_cc_null_label_sum_raises(spark, monkeypatch):
+    """A NULL label sum (decimal overflow) must raise, not read as 0 —
+    two overflowed rounds would otherwise look converged. An empty
+    graph still returns an empty table."""
+    import pytest as _pytest
+    from pyspark.sql import functions as F
+
+    from sonnerie_spark.operators import graph
+
+    empty = spark.createDataFrame([], "id_a: long, id_b: long")
+    assert graph.connected_components(empty).count() == 0
+    monkeypatch.setattr(
+        graph, "_label_sum",
+        lambda: F.max(F.lit(None).cast("decimal(38,0)")).alias("s"),
+    )
+    df = spark.createDataFrame([(1, 2), (2, 3)], "id_a: long, id_b: long")
+    with _pytest.raises(ArithmeticError, match="NULL"):
+        graph.connected_components(df)
+    assert graph.connected_components(empty).count() == 0
+
+
 def test_lsh_index_compact_preserves_probes(spark, sf_dir, tmp_path):
     from sonnerie_spark.operators import dedup
 

@@ -90,9 +90,9 @@ def test_footer_cache_evicts_replaced_runs(db):
     read — a long-lived serve process would otherwise leak fds and
     disk (deleted-but-open files) for every replaced transaction."""
     _seed(db)
-    db.get("beta")  # warm: one footer entry per data run
+    db.get("beta")  # warm: one entry per run (delete runs hold markers)
     pr = db._point_reader
-    n_runs = len(db.data_runs())
+    n_runs = len(db.runs())
     assert len(pr._footers) == n_runs > 1
     old_paths = set(pr._footers)
     db.compact(major=True)
@@ -239,9 +239,9 @@ def test_point_read_prunes_row_groups_by_ts(spark, tmp_path):
     pr = db._point_reader
     fm = pr._run_footers(db.data_runs()[0]).files[0]
     assert fm.pf.metadata.num_row_groups >= 20
-    pruned = fm.groups_for("k", 5000, 5100)
+    pruned = fm.groups_for_range("k", "k\0", 5000, 5100)
     assert len(pruned) <= 2  # the window spans at most 2 of 20 groups
-    assert len(fm.groups_for("k")) >= 20  # unwindowed: all groups
+    assert len(fm.groups_for_range("k", "k\0")) >= 20  # unwindowed: all groups
 
 
 def test_point_reader_matches_spark_plan_random_model(spark, tmp_path):
@@ -339,6 +339,264 @@ def test_point_read_duplicate_key_ts_in_one_run(spark, tmp_path):
     tx.commit()
     assert _norm(_point_rows(db, "dup")) == _norm(_spark_rows(db, "dup"))
     assert _norm(_point_rows(db, "other")) == _norm(_spark_rows(db, "other"))
+
+
+# -- decoded-block cache ----------------------------------------------------
+
+
+def _agrees(db, keys, **kw):
+    """Every key's point read equals the Spark plan's."""
+    for k in keys:
+        assert _norm(_point_rows(db, k, **kw)) == _norm(_spark_rows(db, k, **kw)), k
+
+
+def _live_blocks_only(db):
+    """Every cached block belongs to a listed run directory as it is
+    now (same mtime) and to a file that still exists."""
+    import os
+
+    live = {r.path for r in db.runs()}
+    for run_path, mtime, file_path, _g in db._point_reader._blocks:
+        assert run_path in live and os.stat(run_path).st_mtime_ns == mtime
+        assert os.path.exists(file_path)
+
+
+def test_block_cache_hit_decodes_nothing(db, monkeypatch):
+    """A repeated read is served from decoded blocks and cached markers:
+    no row-group decode, no deletes.parquet read."""
+    import pyarrow.parquet as pq
+
+    _seed(db)
+    calls = []
+    read_row_group = pq.ParquetFile.read_row_group
+    read_table = pq.read_table
+
+    def counting_group(self, *a, **kw):
+        calls.append("read_row_group")
+        return read_row_group(self, *a, **kw)
+
+    def counting_table(*a, **kw):
+        calls.append("read_table")
+        return read_table(*a, **kw)
+
+    monkeypatch.setattr(pq.ParquetFile, "read_row_group", counting_group)
+    monkeypatch.setattr(pq.ParquetFile, "read_row_groups", None)  # no bulk path left
+    monkeypatch.setattr(pq, "read_table", counting_table)
+    first = db.get("alpha")
+    assert "read_row_group" in calls and "read_table" in calls
+    calls.clear()
+    assert db.get("alpha") == first
+    assert calls == []
+    prefix, many = db.get_prefix("be"), db.get_many(["beta", "zeta"])
+    calls.clear()
+    assert db.get_prefix("be") == prefix
+    assert db.get_many(["beta", "zeta"]) == many
+    assert calls == []
+    st = db.stats()["block_cache"]
+    assert st["hits"] > 0 and st["misses"] > 0 and st["evictions"] == 0
+    assert st["resident_bytes"] == sum(
+        b.nbytes for b in db._point_reader._blocks.values()
+    ) > 0
+
+
+def test_stats_block_cache_counters(db):
+    _seed(db)
+    assert "block_cache" not in db.stats()  # no reader yet: key absent
+    db.get("beta")
+    s1 = db.stats()["block_cache"]
+    db.get("beta")
+    s2 = db.stats()["block_cache"]
+    assert s1["misses"] == s2["misses"] > 0
+    assert s2["hits"] - s1["hits"] == s1["misses"]  # same blocks, now hits
+
+
+def test_block_cache_minor_compaction_reuses_newest_name(db):
+    """A minor compaction publishes its output under the newest merged
+    run's NAME: cached blocks of the replaced directory must not serve
+    the new one. The transform changes every value, so a stale block
+    would show."""
+    import pyspark.sql.functions as F
+
+    for v in (1, 2):
+        tx = db.create_tx()
+        tx.add_record("m", T0, "u", [v])
+        tx.add_record("m", T0 + v * NS, "u", [v])
+        tx.commit()
+    newest = db.data_runs()[-1].name
+    assert [r["v_long"] for r in db.get("m")] == [[2], [1], [2]]
+    name = db.compact(transform=lambda df: df.withColumn(
+        "v_long", F.transform("v_long", lambda x: x + 100)))
+    assert name == newest and [r.name for r in db.data_runs()] == [newest]
+    assert [r["v_long"] for r in db.get("m")] == [[102], [101], [102]]
+    _agrees(db, ["m"])
+    _live_blocks_only(db)
+
+
+def test_block_cache_major_compaction(db):
+    _seed(db)
+    _agrees(db, ["alpha", "beta", "zeta"])
+    db.compact(major=True)
+    _agrees(db, ["alpha", "beta", "zeta"])
+    _live_blocks_only(db)
+
+
+def test_block_cache_sees_commits_after_cached_read(db):
+    _seed(db)
+    _agrees(db, ["beta", "under_score"])
+    tx = db.create_tx()
+    tx.add_record("beta", T0 + 2 * NS, "u", [222])  # overwrite a cached row
+    tx.add_record("under_score", T0 + 99 * NS, "u", [7])
+    tx.commit()
+    assert {r["ts"]: r["v_long"][0] for r in db.get("beta")}[T0 + 2 * NS] == 222
+    _agrees(db, ["beta", "under_score"])
+    db.commit_deletes([{"wildcard": "under%", "after_ns": T0 + 2 * NS}])
+    assert [r["ts"] for r in db.get("under_score")] == [T0, T0 + NS]
+    _agrees(db, ["beta", "under_score"])
+
+
+def test_block_cache_rebucket(spark, tmp_path):
+    db = Database(spark, str(tmp_path / "rb"), buckets=2)
+    _seed(db)
+    _agrees(db, ["alpha", "beta", "zeta"])
+    old = db._point_reader
+    db.rebucket(3)
+    _agrees(db, ["alpha", "beta", "zeta"])
+    assert db._point_reader is not old  # rebucket resets the reader
+
+
+def test_block_cache_eviction_under_tiny_budget(db, monkeypatch):
+    from sonnerie_spark import pointread
+
+    _seed(db)
+    keys = ["alpha", "beta", "under_score", "zeta", "missing"]
+    want = {k: db.get(k) for k in keys}
+    full = db.stats()["block_cache"]["resident_bytes"]
+    budget = full // 3
+    monkeypatch.setattr(pointread, "BLOCK_CACHE_BYTES", budget)
+    db._point_reader = None  # fresh reader, tiny budget
+    for _ in range(3):
+        for k in keys:
+            assert db.get(k) == want[k], k
+            st = db.stats()["block_cache"]
+            assert st["resident_bytes"] <= budget
+    assert st["evictions"] > 0
+    assert st["resident_bytes"] == sum(
+        b.nbytes for b in db._point_reader._blocks.values()
+    )
+
+
+def test_block_cache_unsorted_legacy_block(spark, tmp_path):
+    """A run file whose rows are not (key, ts)-sorted — within a row
+    group and across groups — is still indexed and pruned correctly."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sonnerie_spark.bucketing import bucket_file_name, write_run_buckets
+    from sonnerie_spark.db import arrow_record_schema
+
+    db = Database(spark, str(tmp_path / "legacy"), buckets=1)
+    # groups {d, c}, {b, a}, {a}: unsorted inside, descending across
+    keys = ["d", "c", "d", "c", "b", "a", "b", "a", "a"]
+    rows = [
+        {"key": k, "ts": T0 + (17 * i % 9) * NS, "fmt": "u", "v_long": [i],
+         "v_double": None, "v_str": None, "v_bin": None}
+        for i, k in enumerate(keys)
+    ]
+
+    def write(p):
+        os.makedirs(p)
+        tbl = pa.Table.from_pylist(rows, schema=arrow_record_schema())
+        pq.write_table(tbl, os.path.join(p, bucket_file_name(0, "legacy")),
+                       row_group_size=4)
+        write_run_buckets(p, 1)
+
+    db._atomic_commit(write)
+    tx = db.create_tx()
+    tx.add_record("c", T0 + 4 * NS, "u", [100])  # overwrite one legacy row
+    tx.commit()
+    for _ in range(2):  # decode, then from the cache
+        _agrees(db, ["a", "b", "c", "d", "e"])
+        got = db.get_many(["a", "b", "c", "d"])
+        assert all(got[k] == db.get(k) for k in got)
+        assert db.get_prefix("") == [r for k in "abcd" for r in db.get(k)]
+
+
+def test_block_cache_shared_reader_threads_during_compaction(db):
+    """8 threads read through ONE reader while compaction swaps the runs
+    under them: never a partial result, never an error, and the cache's
+    byte counter still equals the bytes it holds."""
+    import sys
+    import threading
+
+    for burst in range(4):
+        tx = db.create_tx()
+        for i in range(10):
+            tx.add_record("hot", T0 + (burst * 10 + i) * NS, "u", [burst * 10 + i])
+        tx.commit()
+    want = db.get("hot")
+    assert len(want) == 40
+    errs, bad = [], []
+
+    def reader():
+        try:
+            for _ in range(30):
+                got = db.get("hot")
+                if got != want:
+                    bad.append(len(got))
+        except Exception as e:  # pragma: no cover
+            errs.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the readers finely
+    try:
+        threads = [threading.Thread(target=reader) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for _ in range(3):
+            db.compact(major=True)
+            tx = db.create_tx()
+            tx.add_record("cold", T0, "u", [1])
+            tx.commit()
+        for t in threads:
+            t.join(timeout=300)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errs and not bad
+    assert db.get("hot") == want
+    _live_blocks_only(db)
+    pr = db._point_reader
+    assert pr.resident_bytes == sum(b.nbytes for b in pr._blocks.values())
+
+
+def test_block_cache_same_run_duplicates_by_payload_rank(spark, tmp_path):
+    """Duplicate (key, ts) rows inside one run keep resolving by payload
+    rank when served from cached blocks, alone and under newer runs."""
+    import pyspark.sql.functions as F
+
+    db = Database(spark, str(tmp_path / "dup"))
+    df = spark.createDataFrame(
+        [("dup", T0, [7]), ("dup", T0, [1]), ("dup", T0 + NS, [2]),
+         ("dup", T0 + NS, [5]), ("dup", T0 + NS, [3])],
+        "key string, ts long, v_long array<long>",
+    ).select(
+        "key", "ts", F.lit("u").alias("fmt"), "v_long",
+        F.lit(None).cast("array<double>").alias("v_double"),
+        F.lit(None).cast("array<string>").alias("v_str"),
+        F.lit(None).cast("array<binary>").alias("v_bin"),
+    )
+    db.commit_dataframe(df, check_duplicates=False)
+    for _ in range(2):
+        assert [(r["ts"], r["v_long"]) for r in db.get("dup")] == [(T0, [7]), (T0 + NS, [5])]
+        _agrees(db, ["dup"])
+    tx = db.create_tx()
+    tx.add_record("dup", T0 + NS, "u", [0])  # a newer run beats any rank
+    tx.commit()
+    for _ in range(2):
+        assert [(r["ts"], r["v_long"]) for r in db.get("dup")] == [(T0, [7]), (T0 + NS, [0])]
+        _agrees(db, ["dup"])
 
 
 def _spark_fold(db, **kw):

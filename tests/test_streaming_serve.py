@@ -205,6 +205,39 @@ def test_serve_put_spooled_large_body(db):
         srv.shutdown()
 
 
+def test_serve_accepted_sockets_disable_nagle(db):
+    """Responses go out as several small writes (status + headers, then
+    the body); with Nagle on, a keep-alive client waits for its delayed
+    ACK before the later write arrives. Accepted sockets must carry
+    TCP_NODELAY."""
+    import http.client
+    import socket
+
+    srv = make_server(db)
+    accepted = []
+    get_request = srv.get_request
+
+    def capture():
+        sock, addr = get_request()
+        accepted.append(sock)
+        return sock, addr
+
+    srv.get_request = capture
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    conn = http.client.HTTPConnection("127.0.0.1", srv.server_address[1], timeout=60)
+    try:
+        conn.request("GET", "/nosuchkey")
+        r = conn.getresponse()
+        assert r.status == 200 and r.read() == b""
+        assert len(accepted) == 1
+        assert accepted[0].getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+    finally:
+        conn.close()
+        srv.shutdown()
+        srv.server_close()
+
+
 def test_serve_rejects_other_methods(server):
     import urllib.error
     import urllib.request
